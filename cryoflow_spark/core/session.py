@@ -19,6 +19,23 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` default: 16g, capped at half the host's
+    ``MemTotal`` so a local driver never asks for more heap than the
+    machine has. Falls back to 16g when ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            kib = next(
+                int(line.split()[1])
+                for line in fh
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    return f"{min(16 * 1024, kib // 2048)}m"
+
+
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -42,12 +59,6 @@ DEFAULT_CONFS: dict[str, str] = {
     ),
     # Benchmarks and the driver run repeated short actions; keep the UI off.
     "spark.ui.showConsoleProgress": "false",
-    # local[32] runs 32 executor threads INSIDE the driver JVM, whose
-    # default 1g heap starves 32 concurrent task memory managers (observed:
-    # GCLocker retry storms, then task OOM on the heavier shuffle stages).
-    # Only effective at JVM launch — harmless when a session already
-    # exists. A real cluster sets executor memory per its own sizing.
-    "spark.driver.memory": "16g",
 }
 
 
@@ -139,7 +150,14 @@ def get_session(
         master = f"local[{cpus}]" if cpus else "local[*]"
     builder = builder.master(master)
 
-    merged = dict(DEFAULT_CONFS)
+    # local[32] runs 32 executor threads INSIDE the driver JVM, whose
+    # default 1g heap starves 32 concurrent task memory managers (observed:
+    # GCLocker retry storms, then task OOM on the heavier shuffle stages).
+    # Half the host's memory at most, so a smaller host does not promise
+    # the JVM a heap it cannot back. Only effective at JVM launch —
+    # harmless when a session already exists. A real cluster sets
+    # executor memory per its own sizing.
+    merged = {**DEFAULT_CONFS, "spark.driver.memory": default_driver_memory()}
     if "spark.sql.shuffle.partitions" not in (conf or {}):
         # Local mode: one shuffle partition per core is the right size for
         # the test scale factors; a real cluster overrides via conf.

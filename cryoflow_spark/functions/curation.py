@@ -319,7 +319,7 @@ def _cdc_inventory(
     core of :func:`cdc_chunks` and the streaming twin's stateless
     per-batch partial (:func:`cdc_chunk_partials`). See
     :func:`cdc_chunks` for algorithm, determinism, and scale notes."""
-    from cryoflow_spark.functions.dedup import portable_hash60
+    from cryoflow_spark.functions.dedup import char_kgrams, portable_hash60
 
     if k < 2:
         raise ValueError("k must be >= 2")
@@ -329,20 +329,17 @@ def _cdc_inventory(
         F.col(id_col).alias("__id"), F.col(text_col).alias("__txt")
     )
     L = F.length("__txt")
-    cut_ends = F.when(
-        L >= k,
+    # gram i (0-based) covers characters i+1 .. i+k; a boundary is cut
+    # after its last one. Texts shorter than k have no grams, no cuts.
+    cut_ends = F.filter(
         F.transform(
-            F.filter(
-                F.sequence(F.lit(1), L - F.lit(k - 1)),
-                lambda i: portable_hash60(
-                    F.col("__txt").substr(i, F.lit(k))
-                )
-                % F.lit(divisor)
-                == 0,
+            char_kgrams("__txt", k),
+            lambda g, i: F.when(
+                portable_hash60(g) % F.lit(divisor) == 0, i + F.lit(k)
             ),
-            lambda i: i + F.lit(k - 1),
         ),
-    ).otherwise(F.array().cast("array<int>"))
+        lambda e: e.isNotNull(),
+    )
     if min_len > 0:
         # nested when: element_at(acc, -1) is only evaluated when the
         # accumulator is non-empty (ANSI mode errors on empty arrays,
@@ -460,10 +457,13 @@ def cdc_chunks(
     arithmetic on in-row arrays.
 
     Scale: boundary selection and chunk assembly are PER-ROW array
-    expressions (zero shuffle, O(doc chars) work in whole-stage
-    codegen); the only shuffles are the chunk-hash census agg and its
-    join back — both keyed on the 32-hex chunk hash, the same cost
-    class as x01's exact dedup. No all-pairs anywhere.
+    expressions (zero shuffle). The window texts come from one
+    :func:`...dedup.char_kgrams` regex scan per document — not one
+    ``substring`` per position, which re-walks the text from its start
+    each time — so boundary selection is O(doc chars × k); each chunk's
+    md5 then reads its own span. The only shuffles are the chunk-hash
+    census agg and its join back — both keyed on the 32-hex chunk hash,
+    the same cost class as x01's exact dedup. No all-pairs anywhere.
     """
     chunks = _cdc_inventory(
         df,
@@ -1159,28 +1159,18 @@ def duplicate_spans(
 def _stride1_grams(base: DataFrame, k: int, hasher) -> DataFrame:
     """Stride-1 ``k``-gram fingerprints of ``(__id, __txt)`` rows:
     ``(__id, __pos, __h)`` — one row per character position that starts
-    a ``k``-gram; O(corpus characters), map-side, no shuffle."""
-    return (
-        base.filter(F.col("__txt").isNotNull() & (F.length("__txt") >= k))
-        .select(
-            "__id",
-            F.explode(
-                F.transform(
-                    F.sequence(
-                        F.lit(1), F.length("__txt") - F.lit(k - 1)
-                    ),
-                    lambda i: F.struct(
-                        i.cast("int").alias("p"),
-                        hasher(
-                            F.col("__txt").substr(i, F.lit(k))
-                        ).alias("h"),
-                    ),
-                )
-            ).alias("__s"),
-        )
-        .select(
-            "__id", F.col("__s.p").alias("__pos"), F.col("__s.h").alias("__h")
-        )
+    a ``k``-gram (1-based). O(corpus characters × k), map-side, no
+    shuffle: each row's grams come from one :func:`...dedup.char_kgrams`
+    regex scan, not a substring walk per position. Null text and texts
+    shorter than ``k`` emit no rows."""
+    from cryoflow_spark.functions.dedup import char_kgrams
+
+    return base.select(
+        "__id", F.posexplode(char_kgrams("__txt", k)).alias("__p0", "__g")
+    ).select(
+        "__id",
+        (F.col("__p0") + F.lit(1)).cast("int").alias("__pos"),
+        hasher(F.col("__g")).alias("__h"),
     )
 
 
@@ -1269,10 +1259,11 @@ def exact_substring_fingerprint_partials(
     ever rescanning ingested text — the x53 signature-persistence
     shape at character level.
 
-    Scale: one gram explode (O(chars), map-side) + ONE fingerprint-
-    keyed min agg with map-side partials — cheaper than the batch
-    remover's sort window; state size is |distinct k-grams|, the same
-    table the batch pass shuffles.
+    Scale: one gram explode (O(chars × k) — one
+    :func:`...dedup.char_kgrams` regex scan per document, map-side) +
+    ONE fingerprint-keyed min agg with map-side partials — cheaper than
+    the batch remover's sort window; state size is |distinct k-grams|,
+    the same table the batch pass shuffles.
     """
     if k < 2:
         raise ValueError("k must be >= 2")
@@ -1418,10 +1409,14 @@ def exact_substring_dedup(
     starts — no floats anywhere.
 
     Scale: the fingerprint explode is O(corpus characters) rows of
-    (id, pos, hash) — linear, map-side, no all-pairs anywhere; the only
-    shuffles are the fingerprint-keyed window (high-cardinality key —
-    skew bounded by the most-repeated single k-gram) and one per-doc
-    regroup of removal starts (collect_list bounded by doc length).
+    (id, pos, hash), built from one regex scan per document
+    (:func:`...dedup.char_kgrams`, O(doc chars × k)) rather than a
+    substring walk per position, which would re-read the text from its
+    start for every gram — linear, map-side, no all-pairs anywhere.
+    The only shuffles are the fingerprint-keyed window (high-cardinality
+    key — skew bounded by the most-repeated single k-gram) and one
+    per-doc regroup of removal starts (collect_list bounded by doc
+    length).
     ``hash_mode="md5"`` is the portable oracle mode (DuckDB-identical);
     ``hash_mode="xxhash64"`` rides 8-byte JVM hashes for production
     (half the shuffle width; a 2^-64 collision removes a span it
@@ -1574,6 +1569,8 @@ def secret_token_scan(
     the doc join-back is a token-keyed equi-join (AQE broadcasts small
     candidate vocabularies).
     """
+    from cryoflow_spark.functions.dedup import char_kgrams
+
     if min_len < 2:
         raise ValueError("min_len must be >= 2")
     if emit not in ("summary", "tokens"):
@@ -1602,12 +1599,7 @@ def secret_token_scan(
         .select(
             "token",
             F.length("token").cast("bigint").alias("__n"),
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(token)),"
-                    " i -> substring(token, i, 1))"
-                )
-            ).alias("__ch"),
+            F.explode(char_kgrams("token", 1)).alias("__ch"),
         )
         .groupBy("token", "__n", "__ch")
         .agg(F.count(F.lit(1)).cast("bigint").alias("__c"))

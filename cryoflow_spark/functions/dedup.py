@@ -24,18 +24,36 @@ from pyspark.sql import functions as F
 _MERSENNE_31 = (1 << 31) - 1
 
 
+def char_kgrams(col, k: int):
+    """Column: every stride-1 character ``k``-gram of ``col``, in order.
+
+    One ``regexp_extract_all`` scan: a zero-width lookahead captures the
+    ``k`` characters starting at each position, so an ``n``-char string
+    costs O(n * k) — a per-position ``substring(text, i, k)`` instead
+    re-walks the UTF-8 bytes from the start for every ``i``, O(n^2).
+    The leading class refuses to start a gram on a low surrogate, so a
+    supplementary code point is one character, exactly as Spark's
+    ``length``/``substring`` count it. Strings shorter than ``k`` give
+    ``[]``; null gives null.
+    """
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    pattern = r"(?s)(?=([^\x{DC00}-\x{DFFF}].{%d}))" % (k - 1)
+    return F.regexp_extract_all(col, F.lit(pattern), F.lit(1))
+
+
 def shingle_set(text_col: str, k: int = 3):
     """Column: distinct character k-shingles of ``text_col`` (JVM-side).
 
-    ``transform(sequence(1, len-k+1), i -> substring(text, i, k))`` then
-    ``array_distinct`` — no Python in the loop.
+    ``array_distinct`` over :func:`char_kgrams` (first-occurrence
+    order), so shingling is one linear regex scan per row. A text
+    shorter than ``k`` is its own single shingle (``[text]``, ``[""]``
+    for the empty string) and null text gives ``[null]``.
     """
-    return F.array_distinct(
-        F.expr(
-            f"transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
-            f" i -> substring({text_col}, i, {k}))"
-        )
-    )
+    text = F.col(text_col)
+    return F.when(
+        F.length(text) >= k, F.array_distinct(char_kgrams(text, k))
+    ).otherwise(F.array(text))
 
 
 def token_set(text_col: str):

@@ -9,10 +9,12 @@ all-unmatched partitions, boundary fractions).
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from cryoflow_spark.functions.asof import asof_join
@@ -613,6 +615,19 @@ def test_zipf_fit_matches_python_ols(spark, freqs):
         assert got["zipf_slope"] is None
 
 
+def round6(x: float) -> float:
+    # Spark's F.round(double, 6) is HALF_UP over the shortest decimal
+    # repr (java BigDecimal.valueOf), same as DuckDB's ROUND — NOT
+    # Python's round(), which differs on .5 ties (e.g. 122/256 =
+    # 0.4765625 -> 0.476563 HALF_UP, 0.476562 half-even; the double
+    # 0.6462555 lies just below its tie, so round() gives 0.646255).
+    return float(
+        Decimal(repr(float(x))).quantize(
+            Decimal("1e-6"), rounding=ROUND_HALF_UP
+        )
+    )
+
+
 @st.composite
 def bm25_corpora(draw):
     vocab = ["alpha", "beta", "gamma", "delta", "eps"]
@@ -630,6 +645,8 @@ def bm25_corpora(draw):
 
 
 @given(bm25_corpora())
+# doc 1's component is the double 0.6462555 exactly: a decimal tie
+@example(([["beta"], ["alpha", "alpha"], ["alpha", "alpha", "alpha"]], ["alpha"]))
 @settings(
     max_examples=15,
     deadline=None,
@@ -659,7 +676,7 @@ def test_bm25_matches_python_reference(spark, corpus):
 
     def idf(t):
         dfc = sum(1 for d in docs if t in d)
-        return round(math.log((2 * n - 2 * dfc + 1) / (2 * dfc + 1) + 1), 6)
+        return round6(math.log((2 * n - 2 * dfc + 1) / (2 * dfc + 1) + 1))
 
     want = {}
     for i, d in enumerate(docs):
@@ -669,17 +686,16 @@ def test_bm25_matches_python_reference(spark, corpus):
             if tf == 0:
                 continue
             comps.append(
-                round(
+                round6(
                     idf(t) * (tf * 2.2)
-                    / (tf + 1.2 * (0.25 + 0.75 * len(d) / avgdl)),
-                    6,
+                    / (tf + 1.2 * (0.25 + 0.75 * len(d) / avgdl))
                 )
             )
         if comps:
             acc = 0.0
             for c in comps:  # canonical term order (sorted above)
                 acc += c
-            want[i] = (len(comps), round(acc, 6))
+            want[i] = (len(comps), round6(acc))
     assert got == want
 
 
@@ -698,20 +714,7 @@ def test_bm25_matches_python_reference(spark, corpus):
 def test_cohens_kappa_matches_python_reference(spark, rows):
     """x144 against the textbook formula on randomized label pairs,
     including the degenerate chance-perfect table."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     from cryoflow_spark.functions.profiling import cohens_kappa
-
-    def round6(x: float) -> float:
-        # Spark's F.round(double, 6) is HALF_UP over the shortest decimal
-        # repr (java BigDecimal.valueOf), same as DuckDB's ROUND — NOT
-        # Python's banker's rounding, which differs on exact .5 ties
-        # (e.g. 122/256 = 0.4765625 -> 0.476563 HALF_UP, 0.476562 half-even).
-        return float(
-            Decimal(repr(float(x))).quantize(
-                Decimal("1e-6"), rounding=ROUND_HALF_UP
-            )
-        )
 
     df = spark.createDataFrame(rows, "gold string, pred string")
     r = cohens_kappa(df, "gold", "pred").collect()[0]

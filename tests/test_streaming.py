@@ -170,6 +170,32 @@ def test_sliding_window_stream(spark, tmp_path):
     assert sum(r["n"] for r in rows) == 20
 
 
+@pytest.mark.parametrize(
+    "ddl",
+    [
+        "ts timestamp, v long",
+        "ts struct<start: timestamp, end: timestamp>, v long",
+    ],
+)
+def test_watermark_dry_run_accepts_event_time(spark, ddl):
+    schema = spark.createDataFrame([], ddl).schema
+    plugin = WatermarkPlugin({"column": "ts", "delay": "1 minute"})
+    assert is_successful(plugin.dry_run(schema))
+
+
+def test_watermark_dry_run_rejects_timestamp_ntz(spark):
+    """`check` must fail where `run` fails: Spark refuses a TIMESTAMP_NTZ
+    event time only when the streaming query starts."""
+    schema = spark.createDataFrame([], "ts timestamp_ntz, v long").schema
+    plugin = WatermarkPlugin({"column": "ts", "delay": "1 minute"})
+    result = plugin.dry_run(schema)
+    assert not is_successful(result)
+    exc = result.failure()
+    assert isinstance(exc, TypeError)
+    assert "'ts'" in str(exc) and "timestamp_ntz" in str(exc)
+    assert "cast" in str(exc)
+
+
 def test_stream_dedup_within_watermark(spark, tmp_path):
     """dropDuplicatesWithinWatermark: duplicates collapse, state bounded."""
     from cryoflow_spark.streaming.dedup_stream import StreamDedupPlugin
